@@ -6335,11 +6335,15 @@ static int an_find_first(AB *ab, int want_tag, const uint8_t *idv,
     return found;
 }
 
-/* arena_doc_text(html, scope_id|None) -> (text, title) | None */
+/* arena_doc_text(html, scope_id|None, metrics=0) -> (text, title) | None;
+ * with metrics set -> (text, title, n_nodes, parse_errors), the
+ * Arena's len(parent) - 1 and errors (as build_arena returns them) */
 static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
     const char *html, *scope = NULL;
     Py_ssize_t n, scope_len = 0;
-    if (!PyArg_ParseTuple(args, "s#|z#", &html, &n, &scope, &scope_len))
+    int metrics = 0;
+    if (!PyArg_ParseTuple(args, "s#|z#p", &html, &n, &scope, &scope_len,
+                          &metrics))
         return NULL;
     if (!g_ready || !g_pyids_ready) Py_RETURN_NONE;
     if (memchr(html, 0, (size_t)n) != NULL) Py_RETURN_NONE;
@@ -6415,7 +6419,10 @@ static PyObject *py_arena_doc_text(PyObject *self, PyObject *args) {
                                             (Py_ssize_t)text.len, "strict");
         PyObject *io = PyUnicode_DecodeUTF8((const char *)title.d,
                                             (Py_ssize_t)title.len, "strict");
-        if (to && io) r = PyTuple_Pack(2, to, io);
+        if (to && io)
+            r = metrics ? Py_BuildValue("(OOii)", to, io, ab->nn - 1,
+                                        ab->errors)
+                        : PyTuple_Pack(2, to, io);
         Py_XDECREF(to); Py_XDECREF(io);
     }
     PyMem_Free(text.d); PyMem_Free(title.d);
@@ -6655,7 +6662,7 @@ static PyMethodDef methods[] = {
     {"build_arena", py_build_arena, METH_VARARGS,
      "build_arena(html, track_spans) -> arena columns tuple | None"},
     {"arena_doc_text", py_arena_doc_text, METH_VARARGS,
-     "arena-built (text, title) for streaming-bail documents"},
+     "arena-built (text, title[, n_nodes, parse_errors]) | None"},
     {NULL, NULL, 0, NULL}
 };
 

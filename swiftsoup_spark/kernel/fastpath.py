@@ -1,23 +1,28 @@
-"""Compiled fast paths: two native engines over one tag/entity registry.
+"""Compiled fast paths: two native engines over one tag/entity registry,
+and the one tier ladder that puts them in front of the Python kernel.
 
-1. **Streaming extractor** — ``doc_text(html) -> (text, title) | None``:
-   fused single-pass parse+text (fastest path; ~250-280 MB/s/core).
-   Bails on constructs that reorder emitted text (see ``BAIL_TAGS``
-   plus ``_fastpath.c``'s header: NUL bytes, a residue of
-   adoption-agency repairs, Noah's-ark evictions) — since round 3 the
-   bail target is the ARENA TIER below, not Python.
+1. **Streaming extractor** — ``doc_text(html) -> (text, title) | None``
+   (``batch_doc_text`` over an Arrow column's buffers): fused
+   single-pass parse+text (fastest path; ~250-280 MB/s/core). Bails on
+   constructs that reorder emitted text (see ``BAIL_TAGS`` plus
+   ``_fastpath.c``'s header: NUL bytes, a residue of adoption-agency
+   repairs, Noah's-ark evictions).
 2. **Arena builder** — ``build_arena(html) -> Arena | None``: the full
    23-insertion-mode tree builder in C, materializing the Python
    kernel's flat arena column-for-column (real adoption agency /
    foster parenting / frameset; non-ASCII names via the exact CPython
-   ``str.lower``). Serves the selector/clean/metrics operators, the
-   public parse API, body fragments (the Cleaner), and
-   ``arena_doc_text`` (text via a C ``node_text`` walk) — the
-   streaming extractor's bail absorber. Bails only on NUL bytes,
-   >64 distinct unknown tags and >2048-deep stacks; the Python kernel
-   is then the final fallback, byte-identical either way
-   (tests/test_fastpath.py, tests/test_arena_build.py; ~1M-doc
-   cumulative differential campaigns, 0 mismatches).
+   ``str.lower``). Serves the selector/clean operators (``fast_parse``),
+   the public parse API, body fragments (the Cleaner), and
+   ``arena_doc_text`` (text via a C ``node_text`` walk, optionally with
+   the parse's node and error counts). Bails only on NUL bytes,
+   >64 distinct unknown tags and >2048-deep stacks.
+
+``extract_column`` is the ladder every text extractor goes through
+(``extract_pages``, the ``html_text``/``html_title`` SQL functions, the
+mixed-format extractor): streaming -> arena -> ``fast_parse`` plus the
+selector engine, per document. Output is byte-identical whichever tier
+serves a document (tests/test_fastpath.py, tests/test_arena_build.py;
+~1M-doc cumulative differential campaigns, 0 mismatches).
 
 The C source is compiled once per machine with the system gcc into the
 package directory (or ``~/.cache`` if read-only); compilation results
@@ -149,9 +154,15 @@ def _tag_table() -> list[tuple[bytes, int]]:
     return out
 
 
+# why the native module is unavailable (gcc's stderr, or the load /
+# init exception); None while it loads fine
+build_error: str | None = None
+
+
 def _compile(src: str, so_path: str) -> bool:
     """gcc-compile the extension; atomic rename so concurrent Spark
-    workers race benignly."""
+    workers race benignly. A failure's reason lands in ``build_error``."""
+    global build_error
     include = sysconfig.get_paths()["include"]
     fd, tmp = tempfile.mkstemp(suffix=".so", dir=os.path.dirname(so_path))
     os.close(fd)
@@ -160,10 +171,12 @@ def _compile(src: str, so_path: str) -> bool:
             ["gcc", "-O2", "-shared", "-fPIC", f"-I{include}", src, "-o", tmp],
             capture_output=True, timeout=120)
         if r.returncode != 0:
+            build_error = r.stderr.decode("utf-8", "replace")
             return False
         os.replace(tmp, so_path)
         return True
-    except Exception:
+    except Exception as e:
+        build_error = repr(e)
         return False
     finally:
         if os.path.exists(tmp):
@@ -212,8 +225,9 @@ _tried = False
 
 
 def get_module():
-    """The loaded+initialized C module, or None (pure-Python fallback)."""
-    global _mod, _tried
+    """The loaded+initialized C module, or None (pure-Python fallback;
+    ``build_error`` says why)."""
+    global _mod, _tried, build_error
     if _tried:
         return _mod
     _tried = True
@@ -228,12 +242,11 @@ def get_module():
                   for k, v in ENT_NOSEMI.items()]
         table = _tag_table()
         m.init_tables(table, semi, nosemi, _MAX_NAME)
-        if hasattr(m, "init_pyids"):
-            from swiftsoup_spark.kernel.tags import GLOBAL_TAGS
-            m.init_pyids([GLOBAL_TAGS.intern(nm.decode())
-                          for nm, _ in table])
+        from swiftsoup_spark.kernel.tags import GLOBAL_TAGS
+        m.init_pyids([GLOBAL_TAGS.intern(nm.decode()) for nm, _ in table])
         _mod = m
-    except Exception:
+    except Exception as e:
+        build_error = repr(e)
         _mod = None
     return _mod
 
@@ -251,31 +264,111 @@ def scope_to_id(css_scope: str | None) -> str | None:
 
 
 def doc_text(html: str, scope_id: str | None = None) -> tuple[str, str] | None:
-    """(text, title) via the C fast path, or None -> use the Python
-    kernel. ``scope_id``: restrict text to the first element with that
-    id (Element.text() of select('#id')[0]; "" when no match).
+    """(text, title) via the C streaming extractor, or None on bail-out.
+    ``scope_id``: restrict text to the first element with that id
+    (Element.text() of select('#id')[0]; "" when no match).
     Byte-identical to the kernel path on accepted documents."""
     m = get_module()
     if m is None:
         return None
     r = m.doc_text(html, scope_id)
-    if r is None and hasattr(m, "arena_doc_text"):
-        # 2nd tier: streaming bail -> materialize the arena in C and
-        # walk node_text there (real adoption agency / foster / ark)
-        r = m.arena_doc_text(html, scope_id)
     if r is None:
         return None
     text, title = r
     return text, title if title is not None else ""
 
 
-def arena_doc_text(html: str, scope_id: str | None = None):
-    """(text, title) via the C arena builder only (the streaming-bail
-    fallback tier), or None -> full Python kernel."""
+def arena_doc_text(html: str, scope_id: str | None = None,
+                   metrics: bool = False):
+    """(text, title) via the C arena builder plus a C ``node_text``
+    walk, or None on bail-out. ``metrics`` appends the full parse's
+    (n_nodes, parse_errors)."""
     m = get_module()
-    if m is None or not hasattr(m, "arena_doc_text"):
+    if m is None:
         return None
-    return m.arena_doc_text(html, scope_id)
+    return m.arena_doc_text(html, scope_id, metrics)
+
+
+def html_str(v) -> str:
+    """One html cell as ``str``: None -> "", bytes -> charset-sniffed
+    decode (``api.decode_html``)."""
+    if v is None:
+        return ""
+    if isinstance(v, (bytes, bytearray)):
+        from swiftsoup_spark.api import decode_html
+        return decode_html(bytes(v))
+    return v
+
+
+def fast_parse(tb, s: str, track_spans: bool = False):
+    """Full DOM build: the C arena builder, or ``tb.parse`` (the Python
+    kernel's ``HtmlTreeBuilder``) when it bails."""
+    arena = build_arena(s, track_spans=track_spans)
+    return arena if arena is not None else tb.parse(s)
+
+
+def extract_column(col, css_scope: str | None = None, metrics: bool = False):
+    """The extraction tier ladder over one Arrow column of html (string
+    or binary; null -> "").
+
+    Returns ``[text, title]`` Arrow string arrays, plus ``[n_nodes,
+    parse_errors]`` int32 arrays when ``metrics`` is set; each document
+    takes the first tier that accepts it:
+
+    1. C streaming: ``batch_doc_text`` over the column's Arrow buffers
+       (string columns), else per-row ``doc_text``. Skipped for
+       ``metrics``, which needs the full tree.
+    2. C arena: ``arena_doc_text``.
+    3. ``fast_parse`` plus ``select`` — for documents both C tiers bail
+       on, and for every document when ``css_scope`` is not a plain
+       ``#id``.
+
+    Binary rows are decoded one at a time inside the row loop. Output is
+    byte-identical whichever tier serves a document."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    scope_id = scope_to_id(css_scope)
+    c_tiers = not css_scope or scope_id is not None
+    stream = c_tiers and not metrics
+    n = len(col)
+    if col.null_count:
+        col = pc.fill_null(col, pa.scalar(b"", col.type))
+    cols = [[""] * n, [""] * n] + ([[0] * n, [0] * n] if metrics else [])
+    todo = range(n)
+    if stream:
+        br = batch_doc_text(col, scope_id)
+        if br is not None:
+            text_arr, title_arr, todo = br
+            if not todo:
+                return [text_arr, title_arr]
+            cols = [text_arr.to_pylist(), title_arr.to_pylist()]
+            stream = False        # the bails go straight to the arena tier
+    tb = None
+    for i in todo:
+        s = html_str(col[i].as_py())
+        r = doc_text(s, scope_id) if stream else None
+        if r is None and c_tiers:
+            r = arena_doc_text(s, scope_id, metrics)
+        if r is None:
+            from swiftsoup_spark.kernel.arena import Document
+            from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
+            from swiftsoup_spark.select.engine import select
+
+            if tb is None:
+                tb = HtmlTreeBuilder(track_spans=False)
+            arena = fast_parse(tb, s)
+            if css_scope:
+                hit = select(arena, 0, css_scope)
+                text = arena.node_text(hit[0]) if hit else ""
+            else:
+                text = arena.node_text(0)
+            r = (text, Document(arena, 0).title(), len(arena.parent) - 1,
+                 arena.errors)
+        for c, v in zip(cols, r):
+            c[i] = v
+    return [pa.array(c, pa.string()) for c in cols[:2]] + [
+        pa.array(c, pa.int32()) for c in cols[2:]]
 
 
 def build_arena(html: str, base_uri: str = "", track_spans: bool = False):
@@ -302,7 +395,7 @@ def build_body_fragment(html: str, base_uri: str = ""):
 
 def _build(html: str, base_uri: str, track_spans: bool, fragment: bool):
     m = get_module()
-    if m is None or not hasattr(m, "build_arena"):
+    if m is None:
         return None
     try:
         r = m.build_arena(html, 1 if track_spans else 0, 1 if fragment else 0)
@@ -361,6 +454,20 @@ def _build(html: str, base_uri: str, track_spans: bool, fragment: bool):
     return a
 
 
+def _utf8_buffers(col):
+    """(data, offsets, large) of a null-free Arrow string array, the
+    shape the C batch entry points read; None for any other array."""
+    import pyarrow as pa
+
+    if col.type not in (pa.string(), pa.large_string()) or col.null_count:
+        return None
+    bufs = col.buffers()          # [validity, offsets, data]
+    if len(bufs) != 3 or bufs[1] is None:
+        return None
+    return (bufs[2] if bufs[2] is not None else b"", bufs[1],
+            col.type == pa.large_string())
+
+
 def batch_md5_prefix64(col):
     """Per-string ``int.from_bytes(md5(s).digest()[:8], "big")`` over a
     ``pyarrow`` string array, computed in C over the raw Arrow buffers
@@ -368,68 +475,41 @@ def batch_md5_prefix64(col):
     array, or ``None`` when the native module is unavailable / the
     array shape is unsupported — callers then hash in Python."""
     import numpy as np
-    import pyarrow as pa
 
     m = get_module()
-    if m is None or not hasattr(m, "batch_md5_prefix64"):
+    b = _utf8_buffers(col) if m is not None else None
+    if b is None:
         return None
-    typ = col.type
-    if typ == pa.string():
-        large = False
-    elif typ == pa.large_string():
-        large = True
-    else:
-        return None
-    if col.null_count:
-        return None
-    bufs = col.buffers()          # [validity, offsets, data]
-    if len(bufs) != 3 or bufs[1] is None:
-        return None
-    data = bufs[2] if bufs[2] is not None else b""
-    raw = m.batch_md5_prefix64(data, bufs[1], len(col), col.offset, large)
+    data, offsets, large = b
+    raw = m.batch_md5_prefix64(data, offsets, len(col), col.offset, large)
     return np.frombuffer(raw, dtype=np.uint64)
 
 
 def batch_doc_text(col, scope_id: str | None = None):
-    """Batch fast path over a ``pyarrow`` string array.
+    """The streaming tier over a null-free ``pyarrow`` string array.
 
     Returns ``(text_array, title_array, bail_indices)`` where the arrays
     are Arrow string arrays built directly from C-produced buffers (no
     per-row Python objects), or ``None`` if the native module is
-    unavailable / the batch shape is unsupported — callers then use the
-    per-row path. Rows listed in ``bail_indices`` hold empty strings and
-    must be recomputed with the Python kernel.
+    unavailable / the array shape is unsupported. Rows listed in
+    ``bail_indices`` hold empty strings and need the next tier.
     """
     import pyarrow as pa
 
     m = get_module()
-    if m is None:
+    b = _utf8_buffers(col) if m is not None else None
+    if b is None:
         return None
-    typ = col.type
-    if typ == pa.string():
-        large = False
-    elif typ == pa.large_string():
-        large = True
-    else:
-        return None
-    if col.null_count:
-        return None
-    bufs = col.buffers()          # [validity, offsets, data]
-    if len(bufs) != 3 or bufs[1] is None:
-        return None
-    data = bufs[2] if bufs[2] is not None else b""
+    data, offsets, large = b
+    n = len(col)
     try:
         tdat, toff, ddat, doff, mask, n_bails = m.batch_extract(
-            data, bufs[1], len(col), col.offset, large, scope_id)
+            data, offsets, n, col.offset, large, scope_id)
     except OverflowError:
         return None
-    n = len(col)
     text_arr = pa.Array.from_buffers(
         pa.string(), n, [None, pa.py_buffer(toff), pa.py_buffer(tdat)])
     title_arr = pa.Array.from_buffers(
         pa.string(), n, [None, pa.py_buffer(doff), pa.py_buffer(ddat)])
-    if n_bails:
-        bail_idx = [i for i, b in enumerate(mask) if b]
-    else:
-        bail_idx = []
+    bail_idx = [i for i, b in enumerate(mask) if b] if n_bails else []
     return text_arr, title_arr, bail_idx

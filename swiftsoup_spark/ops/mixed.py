@@ -8,9 +8,9 @@ one ``mapInArrow`` stage:
   * payload starts with ``%PDF-``  -> the from-scratch PDF extractor
     (``ops.pdftext``; documented bails surface as NULL text)
   * anything else -> charset-aware decode (``api.decode_html``: BOM +
-    ``<meta charset>`` sniff) + the two-tier C HTML extractor
-    (streaming -> C arena walk) with the byte-identical Python kernel
-    as final fallback
+    ``<meta charset>`` sniff) + the extraction tier ladder
+    (``fastpath.extract_column``: C streaming -> C arena -> the
+    byte-identical Python kernel)
 
 Scale shape: routing is a per-document branch inside the same fused
 Scan -> MapInArrow stage every other extractor uses — no shuffle, no
@@ -38,31 +38,24 @@ def extract_any_over(df, payload_col: str = "payload",
     out_names = [f.name for f in out_schema.fields]
 
     def batches(it):
-        from swiftsoup_spark.api import decode_html
-        from swiftsoup_spark.kernel.fastpath import doc_text
-        from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
+        import pyarrow.compute as pc
+
+        from swiftsoup_spark.kernel.fastpath import extract_column
         from swiftsoup_spark.ops.pdftext import extract_pdf_text_bytes
 
-        tb = HtmlTreeBuilder()
         for batch in it:
-            fmts, texts = [], []
-            for raw in batch.column(payload_col):
-                b = raw.as_py()
-                if b is None:
-                    fmts.append(None)
-                    texts.append(None)
-                elif b.startswith(b"%PDF-"):
-                    fmts.append("pdf")
-                    texts.append(extract_pdf_text_bytes(b))
-                else:
-                    fmts.append("html")
-                    s = decode_html(b)
-                    r = doc_text(s)  # two C tiers; None -> Python kernel
-                    texts.append(r[0] if r is not None
-                                 else tb.parse(s).node_text(0))
+            col = batch.column(payload_col)
+            is_pdf = pc.starts_with(col, "%PDF-")          # null payload -> null
+            html = iter(extract_column(col.filter(pc.invert(is_pdf)))[0]
+                        .to_pylist())
+            texts = [None if p is None
+                     else extract_pdf_text_bytes(col[i].as_py()) if p
+                     else next(html)
+                     for i, p in enumerate(is_pdf.to_pylist())]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(nm) for nm in keep_names]
-                + [pa.array(fmts, pa.string()), pa.array(texts, pa.string())],
+                + [pc.if_else(is_pdf, "pdf", "html"),
+                   pa.array(texts, pa.string())],
                 out_names)
 
     return src.mapInArrow(batches, out_schema)

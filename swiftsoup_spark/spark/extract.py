@@ -15,30 +15,14 @@ string -> broadcast by closure -> compiled lazily and cached by
 
 from pyspark.sql import functions as F, types as T
 
+# fast_parse is re-exported: the operators in ``ops/`` build their DOMs with it
+from swiftsoup_spark.kernel.fastpath import fast_parse, html_str  # noqa: F401
+
 SPAN_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("node", T.IntegerType()),
     T.StructField("start", T.LongType()),
     T.StructField("end", T.LongType()),
 ]))
-
-
-def _to_str(v) -> str:
-    if v is None:
-        return ""
-    if isinstance(v, (bytes, bytearray)):
-        from swiftsoup_spark.api import decode_html
-        return decode_html(bytes(v))
-    return v
-
-
-def fast_parse(tb, s: str, track_spans: bool = False):
-    """Full DOM build for the selector/clean/metrics operators: the C
-    arena builder (kernel/fastpath.build_arena, byte-identical to the
-    Python kernel, differential-fuzzed) with per-document fallback to
-    ``tb.parse`` on bail-out."""
-    from swiftsoup_spark.kernel.fastpath import build_arena
-    arena = build_arena(s, track_spans=track_spans)
-    return arena if arena is not None else tb.parse(s)
 
 
 def apply_kernel(df, row_fn, out_fields, in_col="html", keep_cols=("url",),
@@ -74,9 +58,9 @@ def apply_kernel(df, row_fn, out_fields, in_col="html", keep_cols=("url",),
             ctx = batch.column(ctx_col) if ctx_col is not None else None
             for i, raw in enumerate(batch.column(in_col)):
                 if ctx is None:
-                    vals = row_fn(tb, _to_str(raw.as_py()))
+                    vals = row_fn(tb, html_str(raw.as_py()))
                 else:
-                    vals = row_fn(tb, _to_str(raw.as_py()), ctx[i].as_py())
+                    vals = row_fn(tb, html_str(raw.as_py()), ctx[i].as_py())
                 for c, v in zip(cols, vals):
                     c.append(v)
             arrays = [batch.column(nm) for nm in keep_names] + [
@@ -159,20 +143,6 @@ def clean_over(df, whitelist: str = "basic", out_col: str = "clean_html",
                         in_col=in_col, keep_cols=keep_cols)
 
 
-def metrics_over(df, in_col: str = "html", keep_cols=("url",)):
-    """-> (keep_cols..., n_nodes, parse_errors) exact parse metrics
-    (full DOM build; no fast path by construction)."""
-    def row(tb, s):
-        arena = fast_parse(tb, s)
-        return (len(arena.parent) - 1, arena.errors)
-
-    return apply_kernel(
-        df, row,
-        [T.StructField("n_nodes", T.IntegerType()),
-         T.StructField("parse_errors", T.IntegerType())],
-        in_col=in_col, keep_cols=keep_cols)
-
-
 def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
                   metrics: bool = False):
     """pages(url, html, ...) -> (url, *keep_cols, text, title[, n_nodes,
@@ -184,18 +154,18 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     One fused stage pipelined with the scan, no shuffle; Catalyst prunes
     the scan to (url, html, *keep_cols).
 
-    When ``metrics`` is False and ``css_scope`` is None or a simple
-    ``#id`` selector (the boilerplate-strip shape), each document
-    first tries the compiled C streaming extractor
-    (kernel/fastpath.doc_text, ~30× the Python kernel) and falls back to
-    the full Python parse per-document on bail-out — output is
-    byte-identical either way (tests/test_fastpath.py). ``metrics=True``
-    adds exact (n_nodes, parse_errors) columns, which require the full
-    DOM build, so every document takes the Python kernel (used by the
-    resumable pipeline for lineage manifests).
+    Each batch's html column goes through ``kernel/fastpath.extract_column``,
+    the one tier ladder: C streaming extractor -> C arena builder ->
+    Python kernel, per document, byte-identical whichever tier serves it
+    (tests/test_fastpath.py, tests/test_arena_build.py). ``css_scope``
+    None or a plain ``#id`` (the boilerplate-strip shape) stays on the C
+    tiers; any other selector takes the DOM build plus the selector
+    engine. ``metrics=True`` adds the full parse's exact (n_nodes,
+    parse_errors) columns — used by the resumable pipeline's lineage
+    manifest — and skips only the streaming tier: the C arena builder
+    reports both.
     """
     import pyarrow as pa
-    from pyspark.sql import types as T
 
     src = pages_df.select("url", *keep_cols, "html")
     keep_fields = [f for f in src.schema.fields if f.name != "html"]
@@ -210,70 +180,11 @@ def extract_pages(pages_df, css_scope: str | None = None, keep_cols: tuple = (),
     out_names = [f.name for f in out_fields]
 
     def batches(it):
-        from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
-        from swiftsoup_spark.kernel.arena import Document
-        from swiftsoup_spark.select.engine import select as sel
-        from swiftsoup_spark.kernel.fastpath import (
-            arena_doc_text, batch_doc_text, doc_text, scope_to_id)
+        from swiftsoup_spark.kernel.fastpath import extract_column
 
-        scope_id = scope_to_id(css_scope)
-        use_fast = (css_scope is None or scope_id is not None) and not metrics
-        tb = HtmlTreeBuilder(track_spans=False)
         for batch in it:
-            htmls = batch.column("html")
-            if use_fast:
-                # zero-copy batch over the Arrow utf8 buffers: no per-row
-                # Python strings on input, C-built Arrow buffers on output
-                br = batch_doc_text(htmls, scope_id)
-                if br is not None:
-                    text_arr, title_arr, bail_idx = br
-                    if bail_idx:
-                        texts = text_arr.to_pylist()
-                        titles = title_arr.to_pylist()
-                        for i in bail_idx:
-                            s = _to_str(htmls[i].as_py())
-                            # tier 2: C arena build + C node_text walk
-                            r2 = arena_doc_text(s, scope_id)
-                            if r2 is not None:
-                                texts[i], titles[i] = r2
-                                continue
-                            arena = tb.parse(s)
-                            if css_scope:
-                                mm = sel(arena, 0, css_scope)
-                                texts[i] = arena.node_text(mm[0]) if mm else ""
-                            else:
-                                texts[i] = arena.node_text(0)
-                            titles[i] = Document(arena, 0).title()
-                        text_arr = pa.array(texts, pa.string())
-                        title_arr = pa.array(titles, pa.string())
-                    arrays = [batch.column(nm) for nm in keep_names] + [
-                        text_arr, title_arr]
-                    yield pa.RecordBatch.from_arrays(arrays, out_names)
-                    continue
-            texts, titles, nodes, errs = [], [], [], []
-            for raw in htmls:
-                s = _to_str(raw.as_py())
-                if use_fast:
-                    r = doc_text(s, scope_id)
-                    if r is not None:
-                        texts.append(r[0])
-                        titles.append(r[1])
-                        continue
-                arena = tb.parse(s)
-                if css_scope:
-                    m = sel(arena, 0, css_scope)
-                    texts.append(arena.node_text(m[0]) if m else "")
-                else:
-                    texts.append(arena.node_text(0))
-                titles.append(Document(arena, 0).title())
-                if metrics:
-                    nodes.append(len(arena.parent) - 1)
-                    errs.append(arena.errors)
-            arrays = [batch.column(n) for n in keep_names] + [
-                pa.array(texts, pa.string()), pa.array(titles, pa.string())]
-            if metrics:
-                arrays += [pa.array(nodes, pa.int32()),
-                           pa.array(errs, pa.int32())]
+            arrays = [batch.column(nm) for nm in keep_names] + extract_column(
+                batch.column("html"), css_scope, metrics)
             yield pa.RecordBatch.from_arrays(arrays, out_names)
 
     return src.mapInArrow(batches, out_schema)

@@ -92,18 +92,23 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def read_manifest(spark, out_dir: str):
+    """The bucket manifest, or None when ``out_dir`` has none yet (a
+    fresh output). The manifest is a local directory (``run_extraction``
+    commits it with ``shutil``), so existence is checked on disk; any
+    other read failure — a corrupt manifest — raises."""
     p = _manifest_path(out_dir)
-    try:
-        return spark.read.parquet(p)
-    except Exception:
-        return None
+    return spark.read.parquet(p) if os.path.isdir(p) else None
+
+
+def _done(manifest) -> set[int]:
+    if manifest is None:
+        return set()
+    return {r.bucket
+            for r in manifest.filter(F.col("status") == "done").collect()}
 
 
 def done_buckets(spark, out_dir: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return set()
-    return {r.bucket for r in m.filter(F.col("status") == "done").collect()}
+    return _done(read_manifest(spark, out_dir))
 
 
 def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
@@ -117,15 +122,16 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
     IcebergFormat); default resolves from the target shape.
     """
     fmt = table_format or table_format_for(out_dir)
-    done = done_buckets(spark, out_dir)
+    prior = read_manifest(spark, out_dir)
+    done = _done(prior)
     bucketed = pages_df.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
     todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
     if salt > 1:
         todo = todo.repartition(n_buckets * salt, "bucket",
                                 F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
-    # metrics=True: the lineage manifest wants exact (n_nodes,
-    # parse_errors), which need the full DOM build
+    # metrics=True: exact (n_nodes, parse_errors) per page, from the C
+    # arena tier (the streaming tier builds no tree); see extract_pages
     extracted = extract_pages(todo, css_scope, keep_cols=("bucket",),
                               metrics=True)
     out = extracted.select("bucket", "url", "text", "n_nodes", "parse_errors")
@@ -144,8 +150,7 @@ def run_extraction(spark, pages_df, out_dir: str, n_buckets: int = 32,
                 F.expr('bit_xor(xxhash64(concat_ws("\\u0000", url, text)))')
                  .alias("checksum"))
            .withColumn("status", F.lit("done")))
-    prior = read_manifest(spark, out_dir)
-    if prior is not None and done:
+    if done:
         man = prior.filter(F.col("bucket").isin(list(done))).unionByName(man)
     tmp = _manifest_path(out_dir) + ".tmp"
     man.write.mode("overwrite").parquet(tmp)

@@ -361,6 +361,28 @@ def test_arena_doc_text_fuzz():
     assert accepted >= n * 0.999, (accepted, n)
 
 
+def test_arena_doc_text_metrics_fuzz():
+    """metrics=True appends the parse's (len(parent) - 1, errors), the
+    columns extract_pages(metrics=True) serves from this tier."""
+    rng = random.Random(617)
+    docs = CURATED + [rand_doc(rng) for _ in range(1000)] + [
+        '<p id=a id=b class=x class=y>dup attrs</p>',
+        '<b><div>real adoption</b></div>',
+        '<table>FOSTER<tr><td>x</td></tr></table>']
+    accepted = with_errors = 0
+    for html in docs:
+        r = fp.arena_doc_text(html, None, True)
+        if r is None:
+            continue
+        a = HtmlTreeBuilder(track_spans=False).parse(html)
+        assert r == _py_text_title(html) + (len(a.parent) - 1, a.errors), html
+        assert fp.arena_doc_text(html) == r[:2], html
+        accepted += 1
+        with_errors += a.errors > 0
+    assert accepted >= len(docs) * 0.999, (accepted, len(docs))
+    assert with_errors > 0
+
+
 def test_streaming_bail_classes_covered_by_arena_tier():
     """The streaming extractor's historical bail classes (true
     adoption-agency runs, Noah's-ark evictions, misnest repairs) must

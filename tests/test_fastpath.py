@@ -1,7 +1,8 @@
 """Differential tests: C fast path vs the pure-Python kernel.
 
-Contract: for EVERY input, ``fastpath.doc_text(html)`` is either None
-(bail-out -> caller uses the Python kernel) or byte-identical to
+Contract: for EVERY input, ``fastpath.doc_text(html)`` (the streaming
+tier) is either None (bail-out -> the next tier of
+``fastpath.extract_column``) or byte-identical to
 ``(Document.text(), Document.title())`` from the full parse. A bail is
 always safe; a mismatch is a bug.
 

@@ -58,6 +58,94 @@ def test_run_and_resume(spark, tmp_path_factory):
     assert ex.filter(F.col("parse_errors") != 0).count() == 0
 
 
+def _kernel_metrics(html, css_scope):
+    """(text, title, n_nodes, parse_errors) from the pure-Python kernel."""
+    from swiftsoup_spark.api import decode_html
+    from swiftsoup_spark.kernel.arena import Document
+    from swiftsoup_spark.kernel.treebuilder import HtmlTreeBuilder
+    from swiftsoup_spark.select.engine import select
+
+    if isinstance(html, bytes):
+        html = decode_html(html)
+    a = HtmlTreeBuilder().parse(html or "")
+    if css_scope:
+        hit = select(a, 0, css_scope)
+        text = a.node_text(hit[0]) if hit else ""
+    else:
+        text = a.node_text(0)
+    return text, Document(a, 0).title(), len(a.parent) - 1, a.errors
+
+
+METRICS_PAGES = {
+    "dup_attrs": '<title>D</title><div id=main id=x class=a class=b>'
+                 '<p title=1 title=2>dup</p></div>',
+    "adoption": '<div id=main><b>x<div>real adoption</b>tail</div></div>',
+    "foster": '<div id=main><table>FOSTER<tr><td>cell</td></tr></table></div>',
+    "nul": '<div id=main>a\x00b</div><title>N</title>',
+    "unknown_tags": '<div id=main>' + "".join(
+        f"<x-t{i}>w{i}" for i in range(70)) + '</div>',
+    "plain": '<html><head><title> T  t </title></head><body>'
+             '<div id="main"><p>one</p><p>two</p></div>noise</body></html>',
+    "no_main": '<p>no scope match</p>',
+    "null": None,
+}
+
+
+@pytest.mark.parametrize("css_scope", [None, "#main", "div#main"])
+def test_extract_pages_metrics_match_kernel(spark, css_scope):
+    """extract_pages(metrics=True) == the Python kernel's (node_text,
+    Document.title(), len(parent) - 1, errors) on string and binary html,
+    across every tier: streaming bails, arena bails (NUL, >64 unknown
+    tags), duplicate attributes, null html and a <meta charset> page."""
+    from swiftsoup_spark.spark.extract import extract_pages
+
+    binary = {k: v.encode("utf-8") if v is not None else None
+              for k, v in METRICS_PAGES.items()}
+    binary["latin1"] = ('<meta charset="iso-8859-1"><title>caf\xe9</title>'
+                        '<div id=main>na\xefve</div>').encode("latin-1")
+    for pages, typ in ((METRICS_PAGES, "string"), (binary, "binary")):
+        df = spark.createDataFrame(list(pages.items()),
+                                   f"url string, html {typ}")
+        got = {r.url: (r.text, r.title, r.n_nodes, r.parse_errors)
+               for r in extract_pages(df, css_scope, metrics=True).collect()}
+        want = {u: _kernel_metrics(h, css_scope) for u, h in pages.items()}
+        assert got == want, (typ, css_scope)
+        assert got["dup_attrs"][3] > 0
+        plain = {r.url: (r.text, r.title)
+                 for r in extract_pages(df, css_scope).collect()}
+        assert plain == {u: v[:2] for u, v in want.items()}, (typ, css_scope)
+
+
+def test_read_manifest_fresh_output_is_quiet(tmp_path):
+    """No manifest yet -> None, decided on disk: Spark is never asked to
+    read the missing path (which logs a FileNotFoundException trace)."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    reads = []
+
+    class NoRead:
+        @property
+        def read(self):
+            reads.append(1)
+            raise FileNotFoundError("manifest")
+
+    assert P.read_manifest(NoRead(), str(tmp_path)) is None
+    assert P.done_buckets(NoRead(), str(tmp_path)) == set()
+    assert reads == []
+
+
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """A manifest that exists but cannot be read is an error, not 'no
+    buckets done' (which would silently recompute every bucket)."""
+    from swiftsoup_spark.spark import pipeline as P
+
+    man = tmp_path / P.MANIFEST
+    man.mkdir()
+    (man / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        P.done_buckets(spark, str(tmp_path))
+
+
 def test_parallelism_determinism(tmp_path_factory):
     """Same input, two parallelism levels → identical corpus checksums
     (the sandbox stand-in for the N vs 4N cluster-size oracle).

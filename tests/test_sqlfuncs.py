@@ -24,7 +24,12 @@ def test_html_text_matches_extract_pages(spark):
     from swiftsoup_spark.spark.extract import extract_pages
     from swiftsoup_spark.spark.pages import pages_df
 
-    pages = pages_df(spark, SF_DIR).limit(50)
+    # an <?xml prefix must not send the bail fallback to the XML parser
+    xml_page = spark.createDataFrame(
+        [("u:xml", "<?xml version='1.0'?><p>x</p>\x00<script>1<2</script>")],
+        "url string, html string")
+    pages = (pages_df(spark, SF_DIR).limit(50).select("url", "html")
+             .unionByName(xml_page))
     pages.createOrReplaceTempView("pages_v")
     via_sql = {r.url: (r.t, r.ti) for r in spark.sql(
         "SELECT url, html_text(html) AS t, html_title(html) AS ti "
